@@ -21,8 +21,8 @@ from pyspark.sql import functions as F
 from zen3geo_spark.functions.geo import (
     cell_encode, cell_id_sql, cell_parent, cell_parent_sql,
     extract_all_geotags,
-    extract_first_geotag, mercator_x, mercator_x_sql, mercator_y,
-    mercator_y_sql, micro_from_str, micro_from_str_sql,
+    extract_first_geotag, geotag_points, mercator_x, mercator_x_sql,
+    mercator_y, mercator_y_sql, micro_from_str, micro_from_str_sql,
 )
 from zen3geo_spark.functions.hilbert import (
     hilbert_cte_sql, hilbert_encode, hilbert_parent,
@@ -111,14 +111,7 @@ def _points_df(spark: SparkSession) -> DataFrame:
     pages = synth_pages(spark, N_PAGES).withColumn(
         "point_id", F.regexp_extract("url", r"/page/(\d+)", 1).cast("long")
     )
-    lat_s, lon_s = extract_first_geotag(F.col("text"))
-    pts = pages.select("point_id", lat_s.alias("lat_str"), lon_s.alias("lon_str"))
-    pts = pts.filter(F.col("lat_str") != "")
-    return pts.select(
-        "point_id",
-        micro_from_str(F.col("lat_str")).alias("lat_us"),
-        micro_from_str(F.col("lon_str")).alias("lon_us"),
-    )
+    return geotag_points(pages, "point_id")
 
 
 def _points_cte() -> str:
@@ -1281,21 +1274,16 @@ def q_geo_backfill(spark: SparkSession, sf_dir: str) -> DataFrame:
     untagged corpus joins it without shuffling. Output: backfilled
     pages per inherited cell."""
     pages = synth_pages(spark, N_PAGES)
-    lat_s, lon_s = extract_first_geotag(F.col("text"))
-    base = pages.select(
-        F.expr(URL_HOST_SQL).alias("host"),
-        lat_s.alias("lat_str"), lon_s.alias("lon_str"))
-    tagged = (base.filter(F.col("lat_str") != "")
-              .select("host",
-                      cell_encode(micro_from_str(F.col("lat_str")),
-                                  micro_from_str(F.col("lon_str")), 4)
-                      .alias("cell")))
+    host = F.expr(URL_HOST_SQL).alias("host")
+    tagged = geotag_points(pages, host).select(
+        "host", cell_encode("lat_us", "lon_us", 4).alias("cell"))
     per = tagged.groupBy("host", "cell").agg(F.count("*").alias("n"))
     w = Window.partitionBy("host").orderBy(
         F.col("n").desc(), F.col("cell").asc())
     modal = (per.withColumn("rk", F.row_number().over(w))
              .filter(F.col("rk") == 1).select("host", "cell"))
-    untagged = base.filter(F.col("lat_str") == "").select("host")
+    lat_s, _ = extract_first_geotag(F.col("text"))
+    untagged = pages.filter(lat_s == "").select(host)
     return (untagged.join(F.broadcast(modal), "host")
             .groupBy("cell").agg(F.count("*").alias("n_backfilled")))
 
@@ -1388,16 +1376,10 @@ def q_crawl_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
     transition rollup impossible-travel and recrawl planners consume.
     The lag window is per-host (bounded by a host's snapshot count);
     the output is cell-pair-cardinality."""
-    pages = synth_pages(spark, N_PAGES)
-    lat_s, lon_s = extract_first_geotag(F.col("text"))
-    base = (pages.select(F.expr(URL_HOST_SQL).alias("host"),
-                         F.expr(URL_PID_SQL).alias("pid"),
-                         lat_s.alias("lat_str"), lon_s.alias("lon_str"))
-            .filter(F.col("lat_str") != ""))
-    pts = base.select(
-        "host", "pid",
-        cell_encode(micro_from_str(F.col("lat_str")),
-                    micro_from_str(F.col("lon_str")), 4).alias("cell"))
+    pts = geotag_points(synth_pages(spark, N_PAGES),
+                        F.expr(URL_HOST_SQL).alias("host"),
+                        F.expr(URL_PID_SQL).alias("pid")).select(
+        "host", "pid", cell_encode("lat_us", "lon_us", 4).alias("cell"))
     w = Window.partitionBy("host").orderBy("pid")
     tr = pts.withColumn("from_cell", F.lag("cell").over(w)).filter(
         F.col("from_cell").isNotNull())
@@ -1414,15 +1396,9 @@ def q_trajectory_cover(spark: SparkSession, sf_dir: str) -> DataFrame:
     (areas), i.e. road/trajectory coverage at web scale."""
     from zen3geo_spark.operators.cells import cover_segment_cells
 
-    pages = synth_pages(spark, N_PAGES)
-    lat_s, lon_s = extract_first_geotag(F.col("text"))
-    base = (pages.select(F.expr(URL_HOST_SQL).alias("host"),
-                         F.expr(URL_PID_SQL).alias("pid"),
-                         lat_s.alias("lat_str"), lon_s.alias("lon_str"))
-            .filter(F.col("lat_str") != "")
-            .select("host", "pid",
-                    micro_from_str(F.col("lat_str")).alias("lat_us"),
-                    micro_from_str(F.col("lon_str")).alias("lon_us")))
+    base = geotag_points(synth_pages(spark, N_PAGES),
+                         F.expr(URL_HOST_SQL).alias("host"),
+                         F.expr(URL_PID_SQL).alias("pid"))
     w = Window.partitionBy("host").orderBy("pid")
     segs = (base
             .withColumn("x1", F.lag("lon_us").over(w))
@@ -1625,15 +1601,8 @@ def q_cell_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact integer ``(n² − Σn_i²)·10⁴ div n²`` — no logs, no FP — plus
     the dominant language (count desc, lang asc). The geo×text mix
     audit a multilingual corpus builder reads per region."""
-    pages = synth_pages(spark, N_PAGES)
-    lat_s, lon_s = extract_first_geotag(F.col("text"))
-    pts = (pages.select("lang", lat_s.alias("lat_str"),
-                        lon_s.alias("lon_str"))
-           .filter(F.col("lat_str") != "")
-           .select("lang",
-                   cell_encode(micro_from_str(F.col("lat_str")),
-                               micro_from_str(F.col("lon_str")), 4)
-                   .alias("cell")))
+    pts = geotag_points(synth_pages(spark, N_PAGES), "lang").select(
+        "lang", cell_encode("lat_us", "lon_us", 4).alias("cell"))
     per = pts.groupBy("cell", "lang").agg(F.count("*").alias("ni"))
     w = Window.partitionBy("cell").orderBy(F.col("ni").desc(),
                                            F.col("lang").asc())
@@ -1655,15 +1624,9 @@ def q_cell_anomaly(spark: SparkSession, sf_dir: str) -> DataFrame:
     same exact-median discipline as recrawl_cadence), flagging epochs
     with |n − med| > max(3·MAD, 2). The per-region crawl-surge /
     outage screen; windows are per-cell (epoch-count bounded)."""
-    pages = synth_pages(spark, N_PAGES)
-    lat_s, lon_s = extract_first_geotag(F.col("text"))
-    pts = (pages.select(F.col("warc_ts"),
-                        lat_s.alias("lat_str"), lon_s.alias("lon_str"))
-           .filter(F.col("lat_str") != "")
-           .select(F.expr("unix_timestamp(warc_ts) div 600").alias("ep"),
-                   cell_encode(micro_from_str(F.col("lat_str")),
-                               micro_from_str(F.col("lon_str")), 2)
-                   .alias("cell")))
+    pts = geotag_points(synth_pages(spark, N_PAGES), "warc_ts").select(
+        F.expr("unix_timestamp(warc_ts) div 600").alias("ep"),
+        cell_encode("lat_us", "lon_us", 2).alias("cell"))
     cnts = pts.groupBy("cell", "ep").agg(F.count("*").alias("n"))
     w = Window.partitionBy("cell").orderBy(F.col("n").asc(),
                                            F.col("ep").asc())
@@ -1970,15 +1933,9 @@ def q_tile_pyramid_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
     lo = N_PAGES // 5
     pages = synth_pages(spark, n2).withColumn(
         "point_id", F.regexp_extract("url", r"/page/(\d+)", 1).cast("long"))
-    lat_s, lon_s = extract_first_geotag(F.col("text"))
-    pts = (pages
-           .filter((F.col("point_id") < lo) | (F.col("point_id") >= N_PAGES))
-           .select("point_id", lat_s.alias("lat_str"),
-                   lon_s.alias("lon_str"))
-           .filter(F.col("lat_str") != "")
-           .select("point_id",
-                   micro_from_str(F.col("lat_str")).alias("lat_us"),
-                   micro_from_str(F.col("lon_str")).alias("lon_us")))
+    pts = geotag_points(
+        pages.filter((F.col("point_id") < lo) | (F.col("point_id") >= N_PAGES)),
+        "point_id")
     signed = pts.withColumn(
         "sgn", F.when(F.col("point_id") < lo, F.lit(-1)).otherwise(F.lit(1)))
     base = (signed
@@ -2347,14 +2304,8 @@ def q_host_geo_spread(spark: SparkSession, sf_dir: str) -> DataFrame:
     (host-level geo diversity signal). Exact ints throughout."""
     pages = synth_pages(spark, N_PAGES).select(
         F.expr(URL_HOST_SQL).alias("host"), "text")
-    lat_s, lon_s = extract_first_geotag(F.col("text"))
-    pts = pages.select("host", lat_s.alias("lat_str"), lon_s.alias("lon_str"))
-    pts = pts.filter(F.col("lat_str") != "").select(
-        "host",
-        micro_from_str(F.col("lat_str")).alias("lat_us"),
-        micro_from_str(F.col("lon_str")).alias("lon_us"))
-    pts = pts.withColumn("cell6", cell_encode(F.col("lat_us"),
-                                              F.col("lon_us"), 6))
+    pts = geotag_points(pages, "host").withColumn(
+        "cell6", cell_encode("lat_us", "lon_us", 6))
     return pts.groupBy("host").agg(
         F.count("*").alias("n_points"),
         F.countDistinct("cell6").alias("n_cells6"),
@@ -2395,13 +2346,7 @@ def q_geo_velocity(spark: SparkSession, sf_dir: str) -> DataFrame:
     pages = synth_pages(spark, N_PAGES).select(
         F.expr(URL_HOST_SQL).alias("host"),
         F.expr(URL_PID_SQL).alias("pid"), "text")
-    lat_s, lon_s = extract_first_geotag(F.col("text"))
-    pts = pages.select("host", "pid", lat_s.alias("lat_str"),
-                       lon_s.alias("lon_str"))
-    pts = pts.filter(F.col("lat_str") != "").select(
-        "host", "pid",
-        micro_from_str(F.col("lat_str")).alias("lat_us"),
-        micro_from_str(F.col("lon_str")).alias("lon_us"))
+    pts = geotag_points(pages, "host", "pid")
     w = Window.partitionBy("host").orderBy("pid")
     hop = pts.select(
         "host", "pid", "lat_us", "lon_us",
@@ -2883,16 +2828,9 @@ def q_cell_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     growing/shrinking-coverage screen that complements cell_anomaly's
     point outliers. Epochs are rebased to the crawl start so the
     moment sums stay far from bigint range at any corpus size."""
-    pages = synth_pages(spark, N_PAGES)
-    lat_s, lon_s = extract_first_geotag(F.col("text"))
-    pts = (pages.select("warc_ts", lat_s.alias("lat_str"),
-                        lon_s.alias("lon_str"))
-           .filter(F.col("lat_str") != "")
-           .select(F.expr("unix_timestamp(warc_ts) div 300 - 5680224")
-                   .alias("t"),
-                   cell_encode(micro_from_str(F.col("lat_str")),
-                               micro_from_str(F.col("lon_str")), 2)
-                   .alias("cell")))
+    pts = geotag_points(synth_pages(spark, N_PAGES), "warc_ts").select(
+        F.expr("unix_timestamp(warc_ts) div 300 - 5680224").alias("t"),
+        cell_encode("lat_us", "lon_us", 2).alias("cell"))
     cnts = pts.groupBy("cell", "t").agg(F.count("*").alias("y"))
     n, st, sy = F.count("*"), F.sum("t"), F.sum("y")
     sxy = F.sum(F.col("t") * F.col("y"))
@@ -2915,13 +2853,9 @@ def q_simplify_track(spark: SparkSession, sf_dir: str) -> DataFrame:
     pages = synth_pages(spark, N_PAGES).select(
         F.expr(URL_HOST_SQL).alias("host"),
         F.expr(URL_PID_SQL).alias("pid"), "text")
-    lat_s, lon_s = extract_first_geotag(F.col("text"))
-    pts = (pages.select("host", "pid", lat_s.alias("lat_str"),
-                        lon_s.alias("lon_str"))
-           .filter(F.col("lat_str") != "")
-           .select("host", "pid",
-                   micro_from_str(F.col("lon_str")).alias("x_us"),
-                   micro_from_str(F.col("lat_str")).alias("y_us")))
+    pts = geotag_points(pages, "host", "pid").select(
+        "host", "pid", F.col("lon_us").alias("x_us"),
+        F.col("lat_us").alias("y_us"))
     return simplify_sweep(pts, key="host", seq="pid", x="x_us", y="y_us",
                           min_area2=5 * 10 ** 15)
 
@@ -4284,13 +4218,7 @@ def q_stay_points(spark: SparkSession, sf_dir: str) -> DataFrame:
     pages = synth_pages(spark, N_PAGES).select(
         F.expr(URL_HOST_SQL).alias("host"),
         F.expr(URL_PID_SQL).alias("pid"), "text")
-    lat_s, lon_s = extract_first_geotag(F.col("text"))
-    pts = (pages.select("host", "pid", lat_s.alias("lat_str"),
-                        lon_s.alias("lon_str"))
-           .filter(F.col("lat_str") != "")
-           .select("host", "pid",
-                   micro_from_str(F.col("lat_str")).alias("lat_us"),
-                   micro_from_str(F.col("lon_str")).alias("lon_us")))
+    pts = geotag_points(pages, "host", "pid")
     w = Window.partitionBy("host").orderBy("pid")
     dlat = F.col("lat_us") - F.lag("lat_us").over(w)
     dlon = F.col("lon_us") - F.lag("lon_us").over(w)

@@ -6,8 +6,9 @@ import pytest
 from pyspark.sql import functions as F
 
 from zen3geo_spark.functions.geo import (
-    cell_encode, cell_iy_ix, cell_neighbors, cell_parent, mercator_inv_lat,
-    mercator_inv_lon, mercator_x, mercator_y, micro_from_str,
+    cell_encode, cell_id_sql, cell_iy_ix, cell_neighbors, cell_parent,
+    cell_parent_sql, mercator_inv_lat, mercator_inv_lon, mercator_x,
+    mercator_y, micro_from_str,
 )
 
 
@@ -58,6 +59,49 @@ def test_cell_parent_equals_direct_encode(spark):
         != cell_encode(F.col("lat_us"), F.col("lon_us"), 6)
     ).count()
     assert bad == 0
+
+
+def _grid_edge_points(res):
+    """Poles, antimeridians and the micro-degrees on both sides of the
+    first, middle and last row/column boundaries at ``res``."""
+    n = 1 << res
+    lats, lons = {-90_000_000, 0, 90_000_000}, {-180_000_000, 0, 180_000_000}
+    for k in {1, n // 2, n - 1} - {0}:
+        y = -(-k * 180_000_001 // n) - 90_000_000  # first lat of row k
+        x = -(-k * 360_000_001 // n) - 180_000_000  # first lon of col k
+        lats |= {y - 1, y}
+        lons |= {x - 1, x}
+    return sorted((a, o) for a in lats for o in lons
+                  if abs(a) <= 90_000_000 and abs(o) <= 180_000_000)
+
+
+@pytest.mark.parametrize("dtype", ["long", "int"])
+def test_cell_encoder_matches_sql_template_at_grid_edges(spark, dtype):
+    """The Column encoder (cell_encode / cell_parent) and the SQL
+    template the oracles run (cell_id_sql / cell_parent_sql, evaluated by
+    DuckDB) give the same ids at the poles, the antimeridian and on both
+    sides of row/column boundaries, for long and int coordinates."""
+    import duckdb
+
+    for res in (0, 1, 12, 20):
+        pts = _grid_edge_points(res)
+        parents = sorted({0, res // 2, res})
+        df = spark.createDataFrame(pts, f"lat_us {dtype}, lon_us {dtype}")
+        cell = cell_encode(F.col("lat_us"), F.col("lon_us"), res)
+        got = sorted(tuple(r) for r in df.select(
+            "lat_us", "lon_us", cell,
+            *[cell_parent(cell, res, p) for p in parents]).collect())
+
+        cid = cell_id_sql("lat_us", "lon_us", res, "duckdb")
+        vals = ", ".join(f"({a}, {o})" for a, o in pts)
+        want = sorted(duckdb.sql(
+            f"select lat_us, lon_us, {cid}, "
+            + ", ".join(cell_parent_sql(cid, res, p, "duckdb")
+                        for p in parents)
+            + " from (select cast(a as bigint) as lat_us,"
+            f" cast(o as bigint) as lon_us from (values {vals}) t(a, o))"
+        ).fetchall())
+        assert got == want, res
 
 
 def test_cell_encode_bounds(spark):

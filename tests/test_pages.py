@@ -1,15 +1,27 @@
 """Pages source + extraction invariants (BASELINE.json:15): byte-identical
 extracted text per url across engines, extraction paths, and parallelism."""
 
+import re
+
 import duckdb
 import pandas as pd
 from pyspark.sql import functions as F
 
 from zen3geo_spark.functions.geo import (
-    extract_all_geotags, extract_first_geotag, geotag_extract_pandas,
-    micro_from_str,
+    LAT_LON_PATTERN, extract_all_geotags, extract_first_geotag,
+    geotag_points, micro_from_str,
 )
 from zen3geo_spark.sources.pages import pages_cte_sql, synth_pages
+
+
+def geotag_extract_pandas(texts: pd.Series) -> pd.DataFrame:
+    """Reference extraction in pandas: first well-formed tag per text as
+    (lat_str, lon_str), '' when none — the Python-side twin the JVM
+    regexp path must match byte-for-byte."""
+    ext = texts.str.extract(re.compile(LAT_LON_PATTERN), expand=True)
+    ext = ext.fillna("")
+    ext.columns = ["lat_str", "lon_str"]
+    return ext
 
 
 def test_pages_match_duckdb_bitexact(spark):
@@ -113,17 +125,8 @@ def test_extract_points_arrow_matches_jvm(spark):
     pages = synth_pages(spark, 500)
     arrow = {(r["point_id"], r["lat_us"], r["lon_us"])
              for r in extract_points_arrow(pages).collect()}
-    full = {(r["point_id"], r["lat_us"], r["lon_us"])
-            for r in extract_points_arrow(pages, prefilter=False).collect()}
-    assert arrow == full  # pushdown path == full-text kernel
-    lat_s, lon_s = extract_first_geotag(F.col("text"))
-    jvm_df = (
-        pages.select(
-            F.regexp_extract("url", r"/page/(\d+)", 1).cast("long").alias("point_id"),
-            lat_s.alias("lat"), lon_s.alias("lon"))
-        .filter(F.col("lat") != "")
-        .select("point_id", micro_from_str(F.col("lat")).alias("lat_us"),
-                micro_from_str(F.col("lon")).alias("lon_us"))
-    )
+    jvm_df = geotag_points(
+        pages, F.regexp_extract("url", r"/page/(\d+)", 1).cast("long")
+        .alias("point_id"))
     jvm = {(r["point_id"], r["lat_us"], r["lon_us"]) for r in jvm_df.collect()}
     assert arrow == jvm and len(arrow) > 300

@@ -77,13 +77,9 @@ def run(spark, pages_arg: str, out: str, res: int = 12, salt: int = 8) -> dict:
 
     cells = runner.stage(
         "cells", f"{fp_base}|res={res}",
-        lambda: extracted.select(
-            "*",
-            cell_encode(F.col("lat_us"), F.col("lon_us"), res).alias("cell"),
-            cell_parent(
-                cell_encode(F.col("lat_us"), F.col("lon_us"), res), res, 2
-            ).alias("cell2"),
-        ),
+        lambda: extracted.withColumn(
+            "cell", cell_encode(F.col("lat_us"), F.col("lon_us"), res),
+        ).withColumn("cell2", cell_parent(F.col("cell"), res, 2)),
         partition_col="cell2",
     )
 

@@ -1,5 +1,5 @@
 """Geospatial scalar functions: geotag extraction, hierarchical cell index,
-distances.
+reprojection, geohash and hex binning.
 
 Design rule: every function that participates in a DuckDB-oracle query is
 defined ONCE as an engine-parameterized SQL template so the Spark plan
@@ -17,16 +17,15 @@ datashader.py:352-368 canvas grids, xbatcher.py:105-116 chip grids).
 
 from __future__ import annotations
 
-from pyspark.sql import Column
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 # Deterministic geotag grammar used by the synthetic pages table and the
 # extractor. 6-decimal fixed point; the extractor must skip malformed tags.
 LAT_LON_PATTERN = r"lat=(-?\d+\.\d{6}) lon=(-?\d+\.\d{6})"
 
-# engine tokens: integer division + string cast differ between engines
+# engine token: integer division differs between engines
 _DIV = {"spark": " div ", "duckdb": " // "}
-_STR = {"spark": "string", "duckdb": "varchar"}
 
 
 def sql_int_div(engine: str) -> str:
@@ -37,17 +36,11 @@ def sql_int_div(engine: str) -> str:
 # cell index (integer fixed-point: micro-degrees in, bigint cell out)
 # ---------------------------------------------------------------------------
 
-MAX_RES = 20  # (x - pmod) / d stays < 2^53, so the idiv trick is exact
+# the finest grid the engine serves: ~19 m x 38 m cells at the equator,
+# still ~170 micro-degree input quanta per cell side; the integer math
+# itself stays exact to res 30 (see cell_iy_sql)
+MAX_RES = 20
 
-
-def _idiv(x: Column, d: int) -> Column:
-    """Exact non-negative integer division as Column ops (JVM codegen).
-
-    floor(bigint/int) would route through double division and can disagree
-    with the oracle's true integer `//` at quotient boundaries; this stays
-    exact for x < 2^53.
-    """
-    return ((x - F.pmod(x, F.lit(d))) / F.lit(d)).cast("long")
 
 def cell_iy_sql(lat_micro: str, res: int, engine: str) -> str:
     """Row index of the lat/lon quad grid at resolution ``res``.
@@ -106,8 +99,11 @@ def cell_encode(lat_micro: Column | str, lon_micro: Column | str, res: int) -> C
         raise ValueError(f"res {res} exceeds MAX_RES {MAX_RES}")
     lat_micro = F.col(lat_micro) if isinstance(lat_micro, str) else lat_micro
     lon_micro = F.col(lon_micro) if isinstance(lon_micro, str) else lon_micro
-    iy = _idiv((lat_micro + F.lit(90000000)).cast("long") * F.lit(1 << res), 180000001)
-    ix = _idiv((lon_micro + F.lit(180000000)).cast("long") * F.lit(1 << res), 360000001)
+    # Spark's integer div, the operator cell_iy_sql / cell_ix_sql emit
+    iy = F.call_function("div", (lat_micro + F.lit(90000000)).cast("long")
+                         * F.lit(1 << res), F.lit(180000001))
+    ix = F.call_function("div", (lon_micro + F.lit(180000000)).cast("long")
+                         * F.lit(1 << res), F.lit(360000001))
     return (F.lit(1 << (2 * res)) + iy * F.lit(1 << res) + ix).cast("long")
 
 
@@ -116,11 +112,11 @@ def cell_parent(cell: Column, res: int, parent_res: int) -> Column:
     if parent_res > res:
         raise ValueError(f"parent_res {parent_res} must be <= res {res}")
     body = cell - F.lit(1 << (2 * res))
-    iy = _idiv(body, 1 << res)
+    iy = F.call_function("div", body, F.lit(1 << res))
     ix = body - iy * F.lit(1 << res)
     shift = res - parent_res
-    piy = _idiv(iy, 1 << shift)
-    pix = _idiv(ix, 1 << shift)
+    piy = F.call_function("div", iy, F.lit(1 << shift))
+    pix = F.call_function("div", ix, F.lit(1 << shift))
     return (F.lit(1 << (2 * parent_res)) + piy * F.lit(1 << parent_res) + pix).cast(
         "long"
     )
@@ -128,7 +124,7 @@ def cell_parent(cell: Column, res: int, parent_res: int) -> Column:
 
 def cell_iy_ix(cell: Column, res: int) -> tuple[Column, Column]:
     body = cell - F.lit(1 << (2 * res))
-    iy = _idiv(body, 1 << res)
+    iy = F.call_function("div", body, F.lit(1 << res))
     ix = (body - iy * F.lit(1 << res)).cast("long")
     return iy, ix
 
@@ -176,22 +172,7 @@ def extract_all_geotags(text: Column) -> Column:
     )
 
 
-def geotag_extract_pandas(texts):
-    """Arrow/pandas extraction path (pd.Series -> pd.DataFrame of lat/lon
-    strings). Exists to prove the vectorized-UDF path yields byte-identical
-    output to the JVM regexp path (tests/test_pages.py); operators use the
-    JVM path because it stays inside whole-stage codegen.
-    """
-    import re
-
-    ext = texts.str.extract(re.compile(LAT_LON_PATTERN), expand=True)
-    ext = ext.fillna("")
-    ext.columns = ["lat_str", "lon_str"]
-    return ext
-
-
-def extract_points_arrow(pages, url_id_pattern: str = r"/page/(\d+)",
-                         prefilter: bool = True):
+def extract_points_arrow(pages):
     """Arrow-vectorized scan→points: (url, text) → (point_id, lat_us,
     lon_us) via mapInPandas.
 
@@ -200,106 +181,46 @@ def extract_points_arrow(pages, url_id_pattern: str = r"/page/(\d+)",
     materializes the extracted columns once, so downstream cell-encode /
     bbox / refine references are plain attribute reads.
 
-    ``prefilter=True`` (default, the scale path): the JVM scan projects
-    the candidate geotag SUBSTRING (``regexp_extract`` in whole-stage
-    codegen) and drops tagless rows BEFORE the Arrow hop, so Python
-    receives ~30 bytes per surviving row instead of the full page text —
-    classic projection/selection pushdown applied to a UDF boundary
-    (measured 2.4x end-to-end on 1.6M pages; output byte-identical, the
-    extracted tag text per url is unchanged and the semantic parse —
-    group split + exact fixed-point conversion — stays in the vectorized
-    Arrow kernel). ``prefilter=False`` ships raw (url, text) and runs
-    the whole extraction in pandas — same rows, kept as the
-    parity/fallback kernel for sources whose tag grammar the JVM regexp
-    can't express. No shuffle in either path.
-
-    Regex-dialect contract: with ``prefilter=True`` the patterns run in
-    JAVA regex (JVM ``regexp_extract``); with ``prefilter=False`` (and in
-    the pandas re-parse of the prefiltered tag) they run in PYTHON ``re``.
-    A caller-supplied ``url_id_pattern`` must therefore be valid AND
-    equivalent in both dialects: no Python-only syntax such as
-    ``(?P<name>...)`` (Java spells it ``(?<name>...)``), and beware that
-    ``\\d``/``\\w``/``\\s`` are Unicode-aware in Java but ASCII-oriented
-    in Python ``re`` on str for ``\\d`` digits — on non-ASCII text prefer
-    explicit classes like ``[0-9]``. The defaults satisfy this
-    (ASCII digits/dot/minus only). A pattern inexpressible in both
-    dialects should use ``prefilter=False`` to stay entirely in Python
-    ``re``; the pattern is validated against both engines up front so a
-    dialect mismatch fails at plan time, not mid-job on an executor.
+    The JVM scan projects the page id and the first geotag SUBSTRING
+    (``regexp_extract`` in whole-stage codegen) and drops tagless and
+    id-less rows BEFORE the Arrow hop, so Python receives ~30 bytes per
+    surviving row instead of the full page text — projection/selection
+    pushdown applied to a UDF boundary (measured 2.4x end-to-end on 1.6M
+    pages against shipping the full text). The semantic parse — group
+    split + exact fixed-point conversion — runs in the vectorized Arrow
+    kernel, which re-reads the JVM-matched tag with the same
+    ``LAT_LON_PATTERN`` (ASCII digits, dot and minus only, so Java and
+    Python ``re`` agree on it). No shuffle.
     """
     import re as _re
 
-    import numpy as np
     import pandas as pd
 
     pat = _re.compile(LAT_LON_PATTERN)
-    idpat = _re.compile(url_id_pattern)  # Python-dialect check (both paths)
+    pre = pages.select(
+        F.regexp_extract("url", r"/page/(\d+)", 1).try_cast("long")
+        .alias("point_id"),
+        F.regexp_extract("text", LAT_LON_PATTERN, 0).alias("tag"),
+    ).filter((F.col("tag") != "") & F.col("point_id").isNotNull())
 
-    if prefilter:
-        # Java-dialect check: the default path hands url_id_pattern to JVM
-        # regexp_extract, which would otherwise fail at runtime on the
-        # first executor task for Python-only syntax like (?P<name>...)
-        try:
-            jvm = pages.sparkSession._jvm
-            jvm.java.util.regex.Pattern.compile(url_id_pattern)
-        except Exception as e:  # py4j wraps PatternSyntaxException
-            raise ValueError(
-                f"url_id_pattern {url_id_pattern!r} is not valid Java "
-                "regex (prefilter=True runs it in JVM regexp_extract); "
-                "use dialect-portable syntax or pass prefilter=False: "
-                f"{e}") from None
-        pre = pages.select(
-            F.regexp_extract("url", url_id_pattern, 1).try_cast("long")
-            .alias("point_id"),
-            F.regexp_extract("text", LAT_LON_PATTERN, 0).alias("tag"),
-        ).filter((F.col("tag") != "") & F.col("point_id").isNotNull())
-
-        def run_tag(batches):
-            for pdf in batches:
-                if len(pdf) == 0:
-                    continue
-                ext = pdf["tag"].str.extract(pat, expand=True)
-                yield pd.DataFrame({
-                    "point_id": pdf["point_id"].to_numpy(),
-                    "lat_us": (pd.to_numeric(ext[0]) * 1e6).round()
-                    .astype("int64"),
-                    "lon_us": (pd.to_numeric(ext[1]) * 1e6).round()
-                    .astype("int64"),
-                })
-
-        return pre.mapInPandas(
-            run_tag, schema="point_id long, lat_us long, lon_us long")
-
-    def run(batches):
+    def run_tag(batches):
         for pdf in batches:
-            ext = pdf["text"].str.extract(pat, expand=True)
-            ok = ext[0].notna()
-            if not ok.any():
+            if len(pdf) == 0:
                 continue
-            ids = pdf.loc[ok, "url"].str.extract(idpat, expand=True)[0]
-            # a row can carry a geotag in text but an id-less url: drop it
-            # (NaN .astype('int64') would crash the executor)
-            id_ok = ids.notna()
-            if not id_ok.all():
-                ok = ok & id_ok.reindex(ok.index, fill_value=False)
-                ids = ids[id_ok]
-            ids = ids.astype("int64")
-
-            def micro(series: pd.Series) -> np.ndarray:
-                # exact for the grammar's -?\d+\.\d{6} strings in ±180:
-                # double parse error ≤ ulp(180) ≈ 3e-14, ×1e6 → ≤ 3e-8,
-                # far below the 0.5 rounding margin (and ~2x faster than
-                # a second regex pass over the batch)
-                return (pd.to_numeric(series) * 1e6).round().astype("int64")
-
+            ext = pdf["tag"].str.extract(pat, expand=True)
+            # exact for the grammar's -?\d+\.\d{6} strings in ±180:
+            # double parse error ≤ ulp(180) ≈ 3e-14, ×1e6 → ≤ 3e-8, far
+            # below the 0.5 rounding margin
             yield pd.DataFrame({
-                "point_id": ids.to_numpy(),
-                "lat_us": micro(ext.loc[ok, 0]),
-                "lon_us": micro(ext.loc[ok, 1]),
+                "point_id": pdf["point_id"].to_numpy(),
+                "lat_us": (pd.to_numeric(ext[0]) * 1e6).round()
+                .astype("int64"),
+                "lon_us": (pd.to_numeric(ext[1]) * 1e6).round()
+                .astype("int64"),
             })
 
-    return pages.select("url", "text").mapInPandas(
-        run, schema="point_id long, lat_us long, lon_us long")
+    return pre.mapInPandas(
+        run_tag, schema="point_id long, lat_us long, lon_us long")
 
 
 def micro_from_str(s: Column) -> Column:
@@ -325,6 +246,26 @@ def micro_from_str(s: Column) -> Column:
 def micro_from_str_sql(s: str, engine: str) -> str:
     """Same parse as :func:`micro_from_str`, as engine SQL."""
     return f"cast(try_cast({s} as decimal(10,6)) * 1000000 as bigint)"
+
+
+def geotag_points(pages: DataFrame, *keep: str | Column) -> DataFrame:
+    """Pages → ``keep`` columns + (lat_us, lon_us) of the first
+    well-formed geotag; pages without one are dropped. The one JVM
+    geotag kernel every page-point query shares.
+
+    The tag strings are projected and filtered on before the parse, so
+    the page regexp is evaluated once per coordinate for the filter and
+    once for the projection (see :func:`micro_from_str`).
+    """
+    lat_s, lon_s = extract_first_geotag(F.col("text"))
+    tagged = (pages.select(*keep, lat_s.alias("lat_str"),
+                           lon_s.alias("lon_str"))
+              .filter(F.col("lat_str") != ""))
+    return tagged.select(
+        *tagged.columns[:-2],
+        micro_from_str(F.col("lat_str")).alias("lat_us"),
+        micro_from_str(F.col("lon_str")).alias("lon_us"),
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -477,54 +418,6 @@ def crs_forward_np(crs: str):
         return lambda lat, lon: tmerc_np(lat, lon, lon0)
     raise NotImplementedError(f"unsupported CRS {crs!r} (CRS84/4326, "
                               "EPSG:3857, EPSG:326xx supported)")
-
-
-def tmerc_sql(lat_deg: str, lon_deg: str, lon0: float, which: str,
-              engine: str = "duckdb") -> str:
-    """Engine-SQL twin of :func:`tmerc_np` (``which`` = 'e' or 'n').
-    Hyperbolics spelled via exp/ln so Spark and DuckDB share one
-    formulation; agreement with numpy is to ~1e-9 m (libm ulp) — oracle
-    queries round reprojected coordinates to 4 decimals (0.1 mm)."""
-    lat = f"radians({lat_deg})"
-    lam = f"radians(({lon_deg}) - ({lon0!r}))"
-    s = f"sin({lat})"
-    ath = f"(0.5 * ln((1.0 + {s}) / (1.0 - {s})))"
-    athe = f"(0.5 * ln((1.0 + {TM_E!r} * {s}) / (1.0 - {TM_E!r} * {s})))"
-    u = f"({ath} - {TM_E!r} * {athe})"
-    t = f"((exp({u}) - exp(-{u})) / 2.0)"
-    xi_p = f"atan2({t}, cos({lam}))"
-    sl = f"(sin({lam}) / sqrt({t} * {t} + cos({lam}) * cos({lam})))"
-    eta_p = f"ln({sl} + sqrt({sl} * {sl} + 1.0))"
-    if which == "n":
-        terms = [xi_p] + [
-            f"{aj!r} * sin({2 * j} * {xi_p}) * ((exp({2 * j} * {eta_p}) + exp(-({2 * j} * {eta_p}))) / 2.0)"
-            for j, aj in enumerate(TM_ALPHA, start=1)]
-        return f"({UTM_K0!r} * {TM_A!r} * ({' + '.join(terms)}))"
-    terms = [eta_p] + [
-        f"{aj!r} * cos({2 * j} * {xi_p}) * ((exp({2 * j} * {eta_p}) - exp(-({2 * j} * {eta_p}))) / 2.0)"
-        for j, aj in enumerate(TM_ALPHA, start=1)]
-    return f"({UTM_FE!r} + {UTM_K0!r} * {TM_A!r} * ({' + '.join(terms)}))"
-
-
-# ---------------------------------------------------------------------------
-# distances
-# ---------------------------------------------------------------------------
-
-def sq_euclidean_micro(lat1: Column, lon1: Column, lat2: Column, lon2: Column) -> Column:
-    """Squared planar distance in micro-degrees (bigint-exact for ranking)."""
-    dy = (lat1 - lat2).cast("long")
-    dx = (lon1 - lon2).cast("long")
-    return dy * dy + dx * dx
-
-
-def haversine_m(lat1: Column, lon1: Column, lat2: Column, lon2: Column) -> Column:
-    """Great-circle metres from degree columns (doubles)."""
-    r = 6371008.8
-    p1, p2 = F.radians(lat1), F.radians(lat2)
-    dp = F.radians(lat2 - lat1)
-    dl = F.radians(lon2 - lon1)
-    a = F.sin(dp / 2) ** 2 + F.cos(p1) * F.cos(p2) * F.sin(dl / 2) ** 2
-    return F.lit(2 * r) * F.asin(F.sqrt(a))
 
 
 # ---------------------------------------------------------------------------

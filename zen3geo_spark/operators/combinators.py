@@ -87,11 +87,6 @@ def with_global_pos(df: DataFrame, order: list[str],
     return local.withColumn(pos_col, pos.cast("long")).drop("_pid", "_lrn")
 
 
-def iterable_wrapper(spark, rows, schema) -> DataFrame:
-    """IterableWrapper ≙ literal source."""
-    return spark.createDataFrame(rows, schema)
-
-
 def mapper(df: DataFrame, **exprs: Column) -> DataFrame:
     """Mapper ≙ withColumns (per-element scalar/array transform)."""
     return df.withColumns(dict(exprs))

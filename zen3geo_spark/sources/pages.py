@@ -95,12 +95,3 @@ def pages_cte_sql(n: int, with_id: bool = False) -> str:
 
 URL_HOST_SQL = "regexp_extract(url, '^https?://([^/]+)/', 1)"
 URL_PID_SQL = "cast(regexp_extract(url, '/page/([0-9]+)$', 1) as bigint)"
-
-
-def pages_url_parts_sql() -> tuple[str, str]:
-    """Engine-neutral SQL exprs parsing (host, page id) back out of the
-    ``url`` column — the ONE place the URL shape is known, shared by
-    every query (and its DuckDB twin) that stripes snapshots or rolls
-    up by host, so a change to the synthetic URL layout cannot desync
-    the two engines."""
-    return URL_HOST_SQL, URL_PID_SQL

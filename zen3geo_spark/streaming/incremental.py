@@ -12,26 +12,15 @@ extract→cell-encode plan the batch path uses (one code path, two drivers).
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
-from zen3geo_spark.functions.geo import (
-    cell_encode, extract_first_geotag, micro_from_str,
-)
+from zen3geo_spark.functions.geo import cell_encode, geotag_points
 
 
 def extract_and_encode(pages: DataFrame, res: int = 7) -> DataFrame:
     """The shared batch/streaming transformation: geotag extraction →
     micro-degree parse → cell encode. Pure JVM expressions."""
-    lat_s, lon_s = extract_first_geotag(F.col("text"))
-    tagged = pages.select(
-        "url", "warc_ts", "lang",
-        lat_s.alias("lat_str"), lon_s.alias("lon_str"),
-    ).filter(F.col("lat_str") != "")
-    return tagged.select(
-        "url", "warc_ts", "lang", "lat_str", "lon_str",
-        micro_from_str(F.col("lat_str")).alias("lat_us"),
-        micro_from_str(F.col("lon_str")).alias("lon_us"),
-    ).withColumn("cell", cell_encode(F.col("lat_us"), F.col("lon_us"), res))
+    return geotag_points(pages, "url", "warc_ts", "lang").withColumn(
+        "cell", cell_encode("lat_us", "lon_us", res))
 
 
 def run_incremental(spark: SparkSession, pages_dir: str, out_dir: str,

@@ -227,20 +227,14 @@ def stream_cell_counts_to_memory(spark, pages_dir: str, res: int = 6,
     Memory sink holds cell-cardinality rows (<= 4^res), never pages."""
     import tempfile
 
-    from zen3geo_spark.functions.geo import (
-        cell_encode, extract_first_geotag, micro_from_str,
-    )
+    from zen3geo_spark.functions.geo import cell_encode, geotag_points
 
     for q in spark.streams.active:
         if q.name == name:
             q.stop()
     schema = spark.read.parquet(pages_dir).schema
     stream = spark.readStream.schema(schema).parquet(pages_dir)
-    lat_s, lon_s = extract_first_geotag(F.col("text"))
-    pts = (stream.select(lat_s.alias("lat_str"), lon_s.alias("lon_str"))
-           .filter(F.col("lat_str") != "")
-           .select(micro_from_str(F.col("lat_str")).alias("lat_us"),
-                   micro_from_str(F.col("lon_str")).alias("lon_us")))
+    pts = geotag_points(stream)
     agg = (pts.groupBy(
         cell_encode(F.col("lat_us"), F.col("lon_us"), res).alias("cell"))
         .count().withColumnRenamed("count", "n_pages"))
