@@ -26,6 +26,8 @@ import pandas as pd
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
+from tools.sink import consume  # noqa: E402
+
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 # sized so the flagship runs ~60-90s of core-work: long enough that fixed
@@ -196,7 +198,7 @@ def run_queries(spark, sf_dir: str, warm: bool | None = None) -> dict[str, float
     if warm:
         for name, fn in qs.items():
             try:
-                _run_with_watchdog(spark, lambda: fn(spark, sf_dir).count())
+                _run_with_watchdog(spark, lambda: consume(fn(spark, sf_dir)))
             except Exception:
                 pass
         _release_all_blocks(spark)
@@ -205,7 +207,7 @@ def run_queries(spark, sf_dir: str, warm: bool | None = None) -> dict[str, float
     for name, fn in qs.items():
         t0 = time.time()
         try:
-            _run_with_watchdog(spark, lambda: fn(spark, sf_dir).count())
+            _run_with_watchdog(spark, lambda: consume(fn(spark, sf_dir)))
             times[name] = round(time.time() - t0, 3)
         except Exception:
             import traceback

@@ -117,12 +117,28 @@ def test_all_geotags_counts(spark):
         assert r["n"] == expect, r
 
 
+# tags outside the synthetic generator's range: (text, lat_us, lon_us) as
+# micro_from_str parses them — NULL for what decimal(10,6) cannot hold
+EDGE_TAGS = [
+    ("a lat=12345.000000 lon=10.000000 b", None, 10_000_000),
+    ("lat=99999999999999999999.000000 lon=-99999999999999999999.000000",
+     None, None),
+    ("lat=-0.000001 lon=-0.000000", -1, 0),
+    ("lat=0012.500000 lon=-9999.999999", 12_500_000, -9_999_999_999),
+    ("lat=10000.000000 lon=00000000000000000000009.000001", None, 9_000_001),
+]
+
+
 def test_extract_points_arrow_matches_jvm(spark):
     """The Arrow scan path (mapInPandas) and the JVM expression path must
-    produce identical (point_id, lat_us, lon_us) sets."""
+    produce identical (point_id, lat_us, lon_us) sets, out-of-range tags
+    included."""
     from zen3geo_spark.functions.geo import extract_points_arrow
 
-    pages = synth_pages(spark, 500)
+    edge = spark.createDataFrame(
+        [(f"https://edge.test/page/{900_000 + i}", text)
+         for i, (text, _, _) in enumerate(EDGE_TAGS)], "url string, text string")
+    pages = synth_pages(spark, 500).select("url", "text").unionByName(edge)
     arrow = {(r["point_id"], r["lat_us"], r["lon_us"])
              for r in extract_points_arrow(pages).collect()}
     jvm_df = geotag_points(
@@ -130,3 +146,5 @@ def test_extract_points_arrow_matches_jvm(spark):
         .alias("point_id"))
     jvm = {(r["point_id"], r["lat_us"], r["lon_us"]) for r in jvm_df.collect()}
     assert arrow == jvm and len(arrow) > 300
+    assert {p: (la, lo) for p, la, lo in arrow if p >= 900_000} == {
+        900_000 + i: (la, lo) for i, (_, la, lo) in enumerate(EDGE_TAGS)}

@@ -76,6 +76,24 @@ def test_rasterize_unmatched_lengths(spark):
         rasterize(canvas, geoms)
 
 
+def test_rasterize_nn_pairing_same_without_validation(spark):
+    """3 canvases, one distinct rectangle per vset_id: validate=False pairs
+    vset_id == canvas_id exactly as validate=True does."""
+    canvas = fixtures.canvas_rasterize(spark, n=3)
+    rects = [(v, "polygon",
+              [fixtures._xy([(1, 0), (2 + 2 * v, 0), (2 + 2 * v, 1 + v),
+                             (1, 1 + v)])], "OGC:CRS84") for v in range(3)]
+    geoms = fixtures.with_bbox(spark.createDataFrame(
+        rects, fixtures.GEOM_SCHEMA)).withColumn("vset_id", F.col("geom_id"))
+    checked = sorted(rasterize(canvas, geoms).collect())
+    unchecked = sorted(rasterize(canvas, geoms, validate=False).collect())
+    assert unchecked == checked
+    sums = {}
+    for r in checked:
+        sums[r["canvas_id"]] = sums.get(r["canvas_id"], 0) + r["value"]
+    assert len(set(sums.values())) == 3, sums
+
+
 def test_rasterize_geometrycollection(spark):
     canvas = fixtures.canvas_rasterize(spark, n=1)
     geoms = fixtures.geometries_datashader(spark).withColumn(

@@ -21,6 +21,9 @@ import subprocess
 import sys
 import time
 
+# this checkout's sink times both sides, whatever their own bench.py has
+from sink import consume
+
 DEFAULT_QUERIES = (
     "pip_join_salted,ann_ivf,zonal_stats,kmv_distinct,near_dup_verified,"
     "image_stats,word_jaccard"
@@ -64,10 +67,10 @@ def child(repo: str, queries: list[str]) -> None:
             out[name] = -2.0
             continue
         try:
-            fn(spark, SF_DIR).count()  # steady-state warm pass
+            consume(fn(spark, SF_DIR))  # steady-state warm pass
             spark.catalog.clearCache()
             t0 = time.time()
-            fn(spark, SF_DIR).count()
+            consume(fn(spark, SF_DIR))
             out[name] = round(time.time() - t0, 3)
         except Exception:
             import traceback

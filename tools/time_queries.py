@@ -11,6 +11,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from sink import consume  # noqa: E402
 from zen3geo_spark.session import get_spark  # noqa: E402
 
 
@@ -33,10 +34,10 @@ def main() -> None:
     for n in names:
         fn = qs[n]
         t0 = time.time()
-        fn(spark, sf_dir).count()
+        consume(fn(spark, sf_dir))
         cold = time.time() - t0
         t0 = time.time()
-        fn(spark, sf_dir).count()
+        consume(fn(spark, sf_dir))
         warm = time.time() - t0
         out[n] = {"cold": round(cold, 2), "warm": round(warm, 2)}
         print(json.dumps({n: out[n]}), flush=True)

@@ -22,7 +22,8 @@ from pyspark.sql import functions as F
 
 # Deterministic geotag grammar used by the synthetic pages table and the
 # extractor. 6-decimal fixed point; the extractor must skip malformed tags.
-LAT_LON_PATTERN = r"lat=(-?\d+\.\d{6}) lon=(-?\d+\.\d{6})"
+_COORD = r"-?\d+\.\d{6}"
+LAT_LON_PATTERN = rf"lat=({_COORD}) lon=({_COORD})"
 
 # engine token: integer division differs between engines
 _DIV = {"spark": " div ", "duckdb": " // "}
@@ -172,9 +173,54 @@ def extract_all_geotags(text: Column) -> Column:
     )
 
 
+# The Arrow kernel's form of the grammar: LAT_LON_PATTERN with named
+# groups, anchored at the start of the JVM-matched tag (the tag IS the
+# match, so the groups are the same; anchored, RE2 extracts ~2x faster)
+_TAG_GROUPS = rf"^lat=(?P<lat>{_COORD}) lon=(?P<lon>{_COORD})"
+# what micro_from_str's decimal(10,6) holds: at most four integer digits
+# once leading zeros are dropped
+_FITS_DECIMAL_10_6 = r"^-?0*\d{1,4}\.\d{6}$"
+
+
+def _micro_from_group(s):
+    """Arrow twin of :func:`micro_from_str` for one ``_COORD`` capture
+    group: drop the '.' and parse the digits as int64. Exact, and NULL
+    (never an error, never a wrapped value) where ``micro_from_str`` is
+    NULL: a value that does not fit decimal(10,6)."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    fits = pc.match_substring_regex(s, _FITS_DECIMAL_10_6)
+    s = pc.if_else(fits, s, pa.scalar(None, pa.string()))
+    return pc.cast(pc.replace_substring(s, ".", ""), pa.int64())
+
+
+def _geotag_kernel(batches):
+    """The Python side of :func:`extract_points_arrow`: (point_id, tag)
+    batches → (point_id, lat_us, lon_us), computed on Arrow arrays."""
+    import pandas as pd
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    for pdf in batches:
+        if len(pdf) == 0:
+            continue
+        groups = pc.extract_regex(pa.array(pdf["tag"], pa.string()),
+                                  _TAG_GROUPS)
+        lat, lon = (_micro_from_group(pc.struct_field(groups, k))
+                    for k in ("lat", "lon"))
+        # Arrow-backed columns hand the int64 arrays, NULLs included, back
+        # to Spark as they are (a numpy column would turn NULL into NaN)
+        yield pd.DataFrame({
+            "point_id": pdf["point_id"].to_numpy(),
+            "lat_us": pd.arrays.ArrowExtensionArray(lat),
+            "lon_us": pd.arrays.ArrowExtensionArray(lon),
+        })
+
+
 def extract_points_arrow(pages):
     """Arrow-vectorized scan→points: (url, text) → (point_id, lat_us,
-    lon_us) via mapInPandas.
+    lon_us), the rows :func:`geotag_points` gives for the same pages.
 
     This is the 100 TB scan path the north star describes ("geolocations
     extracted from page text via vectorized Arrow UDFs"): the Python node
@@ -186,41 +232,30 @@ def extract_points_arrow(pages):
     id-less rows BEFORE the Arrow hop, so Python receives ~30 bytes per
     surviving row instead of the full page text — projection/selection
     pushdown applied to a UDF boundary (measured 2.4x end-to-end on 1.6M
-    pages against shipping the full text). The semantic parse — group
-    split + exact fixed-point conversion — runs in the vectorized Arrow
-    kernel, which re-reads the JVM-matched tag with the same
-    ``LAT_LON_PATTERN`` (ASCII digits, dot and minus only, so Java and
-    Python ``re`` agree on it). No shuffle.
+    pages against shipping the full text).
+
+    The Python side is the module-level ``_geotag_kernel`` behind
+    ``mapInPandas``; it works on Arrow arrays with ``pyarrow.compute``,
+    not per row. It splits the tag with ``extract_regex`` and
+    ``LAT_LON_PATTERN``'s named-group form; RE2's ``\\d``, like Java's, is
+    ASCII only, so both engines read the same groups. Each group is parsed
+    exactly: the '.' is dropped and the digits are cast to int64 (no float
+    step). A coordinate that does not fit decimal(10,6) — more than four
+    integer digits — is NULL, as in :func:`micro_from_str`; the kernel
+    never raises and never wraps. The hop stays ``mapInPandas`` rather
+    than ``mapInArrow`` because benchmark traces find the extract layer by
+    its ``MapInPandas`` plan node. Being module-level, the kernel is
+    pickled by reference, so a worker imports this package to run it
+    (see :func:`zen3geo_spark.keep_unchanged_zip_directories`). No
+    shuffle.
     """
-    import re as _re
-
-    import pandas as pd
-
-    pat = _re.compile(LAT_LON_PATTERN)
     pre = pages.select(
         F.regexp_extract("url", r"/page/(\d+)", 1).try_cast("long")
         .alias("point_id"),
         F.regexp_extract("text", LAT_LON_PATTERN, 0).alias("tag"),
     ).filter((F.col("tag") != "") & F.col("point_id").isNotNull())
-
-    def run_tag(batches):
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            ext = pdf["tag"].str.extract(pat, expand=True)
-            # exact for the grammar's -?\d+\.\d{6} strings in ±180:
-            # double parse error ≤ ulp(180) ≈ 3e-14, ×1e6 → ≤ 3e-8, far
-            # below the 0.5 rounding margin
-            yield pd.DataFrame({
-                "point_id": pdf["point_id"].to_numpy(),
-                "lat_us": (pd.to_numeric(ext[0]) * 1e6).round()
-                .astype("int64"),
-                "lon_us": (pd.to_numeric(ext[1]) * 1e6).round()
-                .astype("int64"),
-            })
-
     return pre.mapInPandas(
-        run_tag, schema="point_id long, lat_us long, lon_us long")
+        _geotag_kernel, schema="point_id long, lat_us long, lon_us long")
 
 
 def micro_from_str(s: Column) -> Column:

@@ -51,7 +51,8 @@ def validate_rasterize_inputs(canvas_df: DataFrame, geoms_df: DataFrame) -> tupl
     ONE aggregated pass per input table (counts, null-crs tallies, distinct
     geometry kinds, vector-set count all ride one aggregate each) instead
     of a driver action per check — at 100 TB the checks cost two small
-    jobs, and ``validate=False`` skips them entirely.
+    jobs; ``validate=False`` skips the checks and runs one small job for
+    the kinds and the vector-set count.
     """
     crow = canvas_df.agg(
         F.count("*").alias("n"),
@@ -125,8 +126,14 @@ def rasterize(canvas_df: DataFrame, geoms_df: DataFrame, agg: str | None = None,
     if validate:
         _, n_vec, kind = validate_rasterize_inputs(canvas_df, geoms_df)
     else:
-        n_vec, kind = 1, None
-        kinds = [r[0] for r in geoms_df.select("geom_type").distinct().collect()]
+        # one small job for the kinds and, as validate=True pairs them, the
+        # number of vector sets (N:N on vset_id, else every canvas)
+        aggs = [F.collect_set("geom_type").alias("kinds")]
+        if "vset_id" in geoms_df.columns:
+            aggs.append(F.countDistinct("vset_id").alias("nv"))
+        row = geoms_df.agg(*aggs).collect()[0]
+        n_vec = row["nv"] if "vset_id" in geoms_df.columns else 1
+        kinds = row["kinds"]
         kind = ("point" if kinds[0] in _POINT_TYPES else
                 "line" if kinds[0] in _LINE_TYPES else "polygon")
     agg = agg or DEFAULT_AGG.get(kind, "count" if kind == "point" else "any")
